@@ -117,18 +117,29 @@ def shingles(
     normalize/split/gram/md5 chain is the compute-heavy stage of every
     dedup operator, and a single-row-group parquet input would otherwise
     pin it to 1-2 cores (measured 11.6 → 2.9 s at sf1)."""
-    docs = ensure_min_parallelism(docs)
-    toks_df = docs.select(
+    toks_df = _tokens(ensure_min_parallelism(docs), n, id_col, text_col)
+    return toks_df.select(
+        "doc_id", F.explode(F.array_distinct(_grams(n))).alias("sh")
+    )
+
+
+def _tokens(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, toks): normalized word tokens of the docs that have at
+    least n of them (shorter, empty and NULL texts have no shingle)."""
+    return docs.select(
         F.col(id_col).alias("doc_id"),
         F.split(norm_text(F.col(text_col)), " ").alias("toks"),
     ).where(F.size("toks") >= n)
-    grams = F.transform(
+
+
+def _grams(n: int):
+    """The word n-grams of the ``toks`` column, in text order."""
+    return F.transform(
         F.sequence(F.lit(1), F.size("toks") - (n - 1)),
         lambda i: F.concat_ws(
             " ", *[F.element_at(F.col("toks"), (i + j).cast("int")) for j in range(n)]
         ),
     )
-    return toks_df.select("doc_id", F.explode(F.array_distinct(grams)).alias("sh"))
 
 
 def shingle_hashes(
@@ -152,6 +163,15 @@ def _jaccard(col_common, col_a, col_b):
 # corpus itself occupies).  Beyond it the joins fall back to shuffles —
 # at 100-TB doc counts a broadcast would be a driver/network abort.
 _SIZES_BROADCAST_MAX_DOCS = 4_000_000
+
+
+def _shuffle_partitions(spark) -> int | None:
+    """``spark.sql.shuffle.partitions`` as an int, or None when it is
+    not one (some platforms set ``'auto'``)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    except ValueError:
+        return None
 
 
 def _certified_pairs_by_h(sh: DataFrame) -> DataFrame:
@@ -184,7 +204,8 @@ def _certified_pairs_by_h(sh: DataFrame) -> DataFrame:
     # shuffle.partitions), so this never REDUCES parallelism at scale.
     spark = sh.sparkSession
     fan = spark.sparkContext.defaultParallelism * 4
-    if int(spark.conf.get("spark.sql.shuffle.partitions", "200")) < fan:
+    width = _shuffle_partitions(spark)
+    if width is not None and width < fan:
         byh = byh.repartition(fan)
     return (
         byh.select(F.explode("ids").alias("a"), "ids")
@@ -836,18 +857,50 @@ def minhash_signatures(sh_hashed: DataFrame, k: int = 16, with_sizes: bool = Fal
     shingle relation serves both the signature and the later Jaccard
     verification, instead of two separate groupBy shuffles."""
     hashed = sh_hashed.select(
-        "doc_id",
-        *[
-            ((F.lit(HASH_A[i]) * (F.col("h") % HASH_P) + F.lit(HASH_B[i])) % HASH_P).alias(
-                f"g{i}"
-            )
-            for i in range(k)
-        ],
+        "doc_id", *[_mh_hash(i)(F.col("h")).alias(f"g{i}") for i in range(k)]
     )
     aggs = [F.min(f"g{i}").alias(f"mh{i}") for i in range(k)]
     if with_sizes:
         aggs.append(F.count(F.lit(1)).alias("n_sh"))
     return hashed.groupBy("doc_id").agg(*aggs)
+
+
+def _mh_hash(i: int):
+    """The i-th universal hash, as a function of a shingle-hash column."""
+    return lambda h: (F.lit(HASH_A[i]) * (h % HASH_P) + F.lit(HASH_B[i])) % HASH_P
+
+
+def minhash_sketch(
+    docs: DataFrame,
+    n: int = 3,
+    k: int = 16,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """(doc_id, hs, n_sh, mh0..mh{k-1}): ONE row per document holding
+    its sorted distinct shingle-hash array, the array's size and its k
+    MinHash values, built from narrow per-row expressions only (n-grams
+    by ``transform``, hashes by ``array_distinct(transform(...))``, each
+    mh_i an ``array_min`` over the hashed array) — no explode, no
+    groupBy, so the plan has no exchange.  Row for row it equals
+    ``minhash_signatures(shingle_hashes(d), k, with_sizes=True)`` joined
+    to ``shingle_arrays(shingle_hashes(d))``, dropping the same docs
+    (fewer than n tokens, empty or NULL text).  ``doc_id`` must be
+    unique: the exploded forms merge a repeated id's shingles, the
+    sketch keeps one row per input row."""
+    hs = _tokens(docs, n, id_col, text_col).select(
+        "doc_id",
+        F.sort_array(F.array_distinct(F.transform(_grams(n), md5long))).alias("hs"),
+    )
+    return hs.select(
+        "doc_id",
+        "hs",
+        F.size("hs").alias("n_sh"),
+        *[
+            F.array_min(F.transform("hs", _mh_hash(i))).alias(f"mh{i}")
+            for i in range(k)
+        ],
+    )
 
 
 def _banded(sig: DataFrame, k: int, bands: int) -> DataFrame:

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 def dump_to_csv(
@@ -52,11 +52,14 @@ def dump_to_csv(
 
 def read_dump(spark: SparkSession, out_dir: str, schema: StructType) -> DataFrame:
     """S4: scan a K1 dump back (readcsv, loadcsv.py:91-94) with an
-    explicit schema (no inference pass) plus the dt partition column."""
+    explicit schema (no inference pass) plus the dt partition column.
+    The caller's ``schema`` is left as it was (``StructType.add``
+    mutates in place)."""
+    with_dt = StructType([*schema.fields, StructField("dt", StringType())])
     return (
         spark.read.option("header", True)
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .schema(schema.add("dt", "string"))
+        .schema(with_dt)
         .csv(out_dir)
     )
 

@@ -10,6 +10,16 @@ poll into durable state).  This module keeps the LSH index as durable
 Spark-native state and makes each micro-batch cost proportional to the
 BATCH, never the corpus:
 
+* **The batch side is one row per document, with no exchange.**
+  ``minhash_sketch`` (operators/dedup.py) builds each doc's sorted
+  distinct shingle-hash array, its size and its MinHash signature from
+  narrow per-row expressions, and the micro-batch persists only that
+  sketch.  Banding, both verifies and the ``sh`` run (the sketch's
+  ``explode(hs)``) read it, so a batch no longer shuffles every
+  shingle row twice to sign itself: the fixed per-trigger cost of jobs,
+  exchanges and freshly compiled plans is what dominates a small batch.
+  The batch operators keep the exploded form and stay the independent
+  parity reference.
 * **State = an LSM of immutable sorted BUCKETED runs, defined by a
   MANIFEST, not by directory listings.**  Each micro-batch appends two
   runs: the batch's banded MinHash digests
@@ -45,13 +55,18 @@ BATCH, never the corpus:
   pushed predicates cost more than the batch-sized scan they would
   save (measured 5-10× per-batch slowdown when un-gated), so the probe
   reads the runs whole — still O(batch) I/O, since the gate bounds the
-  state itself.  Either branch is O(batch), never O(corpus).
+  state itself.  Either branch is O(batch), never O(corpus).  The batch
+  size the gate needs is a ``count()`` of the persisted sketch; the
+  footprint aggregate (distinct keys, touched buckets) runs only when
+  the gate is open.
 * **Probe = broadcast the batch, never shuffle the corpus.**  New-vs-
   corpus candidates come from ``state_sig ⋈ broadcast(batch_bands)`` on
   (band, bkey); exact-Jaccard verification reads only the state shingle
-  rows of candidate docs via a broadcast semi-join.  The corpus-side
-  relations are never exchanged; per-batch shuffle volume is
-  O(batch + candidates).
+  rows of candidate docs via a broadcast semi-join, folds them into
+  per-doc arrays (``shingle_arrays``) and intersects them with the batch
+  sketch's arrays — the same array verify the within-batch pairs use.
+  The corpus-side relations are never exchanged; per-batch shuffle
+  volume is O(batch + candidates).
 * **Emissions are exactly-once**: each batch's verified pairs overwrite
   ``pairs_dir/ingest_id=N`` BEFORE the manifest commit, so a replay
   replaces — never duplicates — its pairs, and the final read lists
@@ -102,9 +117,9 @@ from pyspark.sql.types import StructType
 
 from ..operators.dedup import (
     _banded,
-    _verify_jaccard_pairs,
-    minhash_signatures,
-    shingle_hashes,
+    _verify_jaccard_pairs_arrays,
+    minhash_sketch,
+    shingle_arrays,
 )
 from ..operators.scale import auto_bucket_count
 from .commitlog import LocalFS, ManifestLog
@@ -494,12 +509,14 @@ def run_dedup_stream_minhash(
     pairs_schema = f"a {id_type}, b {id_type}, jaccard double, ingest_id int"
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sh_b = shingle_hashes(batch_df, n, id_col, text_col).persist()
-        sig_b = minhash_signatures(sh_b, k, with_sizes=True).persist()
-        banded_b = _banded(sig_b.select("doc_id", *mh_cols), k, bands).persist()
+        # the batch side is ONE persisted row per doc — shingle-hash
+        # array, its size and the signature from narrow expressions, no
+        # exchange; banding, the within-batch verify, the cross verify's
+        # batch arrays and the sh run are all read off it
+        sk = minhash_sketch(batch_df, n, k, id_col, text_col).persist()
+        banded_b = _banded(sk.select("doc_id", *mh_cols), k, bands)
         cand_cross = None
         try:
-            sizes_b = sig_b.select("doc_id", "n_sh")
             state = _load_state(state_dir, fs)
             # runs strictly older than this batch: a retried batch must
             # not probe (or double-count) its own crashed attempt, and
@@ -510,21 +527,13 @@ def run_dedup_stream_minhash(
             # footprints are computed at the LARGEST live modulus; each
             # run's filter projects them down exactly (powers of two)
             probe_m = max((int(r["n_buckets"]) for r in runs_before), default=w_buckets)
-            # ONE bounded agg job (round-7 advice #6 — this replaces the
-            # separate count job AND the overflow bucket-footprint job):
-            # exact batch size for the gate + manifest, distinct probe-
-            # key count, and the touched bucket set.  Every output is
-            # O(1) or ≤ probe_m values — never key- or corpus-sized.
-            fp = banded_b.agg(
-                F.countDistinct("doc_id").alias("n_docs"),
-                F.countDistinct("bkey").alias("n_keys"),
-                F.collect_set(_bucket_of(F.col("bkey"), probe_m)).alias("buckets"),
-            ).first()
-            n_b = int(fp["n_docs"])
+            # exact batch size for the gate + manifest: a count of the
+            # one persisted sketch (it also materializes the cache)
+            n_b = sk.count()
             do_prune = state_docs > prune_min_state_ratio * max(n_b, 1)
 
             # within-batch pairs: the ordinary pairwise form over the
-            # (small) batch — both sides' shingles are batch-local
+            # (small) batch, verified on the sketch's own arrays
             cand_within = (
                 banded_b.select(F.col("doc_id").alias("a"), "band", "bkey")
                 .join(
@@ -535,19 +544,27 @@ def run_dedup_stream_minhash(
                 .select("a", "b")
                 .distinct()
             )
-            pairs = _verify_jaccard_pairs(cand_within, sh_b, sizes_b, threshold)
+            pairs = _verify_jaccard_pairs_arrays(cand_within, sk, threshold)
 
-            bkts = sorted(int(b) for b in fp["buckets"]) if do_prune else None
-            bkeys = None
-            if do_prune and int(fp["n_keys"]) <= _KEY_PUSH_CAP:
-                # the key list is worth shipping (row-group skips inside
-                # touched buckets) only under the cap; one small collect
-                bkeys = [
-                    r["k"]
-                    for r in banded_b.select(F.col("bkey").alias("k"))
-                    .distinct()
-                    .collect()
-                ]
+            bkts = bkeys = None
+            if do_prune:
+                # the footprint (distinct probe-key count + touched
+                # bucket set) is paid only above the gate; every output
+                # is O(1) or ≤ probe_m values — never key- or corpus-sized
+                fp = banded_b.agg(
+                    F.countDistinct("bkey").alias("n_keys"),
+                    F.collect_set(_bucket_of(F.col("bkey"), probe_m)).alias("buckets"),
+                ).first()
+                bkts = sorted(int(b) for b in fp["buckets"])
+                if int(fp["n_keys"]) <= _KEY_PUSH_CAP:
+                    # the key list is worth shipping (row-group skips
+                    # inside touched buckets) only under the cap
+                    bkeys = [
+                        r["k"]
+                        for r in banded_b.select(F.col("bkey").alias("k"))
+                        .distinct()
+                        .collect()
+                    ]
             probe = bool(bkts) if do_prune else bool(n_b and state_docs)
             state_sig = (
                 _read_runs(
@@ -580,8 +597,9 @@ def run_dedup_stream_minhash(
                 if have_cands:  # zero candidates: skip the sh state read entirely
                     # verify reads ONLY candidate docs' state shingle
                     # rows (bucket+IN prune at the scan, broadcast
-                    # semi-join for exactness: no state shuffle), and
-                    # their n_sh falls out of the same filtered rows
+                    # semi-join for exactness: no state shuffle) and
+                    # folds them into per-doc arrays, the same form as
+                    # the batch side
                     cand_ids = cand_cross.select(
                         F.col("a").alias("doc_id")
                     ).distinct()
@@ -590,17 +608,16 @@ def run_dedup_stream_minhash(
                         # band collisions — broadcastable exactly when
                         # the batch itself is
                         cand_ids = F.broadcast(cand_ids)
-                    sh_a = _read_runs(
-                        spark, sh_root, runs_before, sh_schema,
-                        key_col="doc_id", keys=a_ids,
-                        touched=a_bkts, probe_modulus=probe_m if do_prune else None,
-                    ).join(cand_ids, "doc_id", "left_semi")
-                    sizes_a = sh_a.groupBy("doc_id").agg(
-                        F.count(F.lit(1)).alias("n_sh")
+                    arrs_a = shingle_arrays(
+                        _read_runs(
+                            spark, sh_root, runs_before, sh_schema,
+                            key_col="doc_id", keys=a_ids,
+                            touched=a_bkts,
+                            probe_modulus=probe_m if do_prune else None,
+                        ).join(cand_ids, "doc_id", "left_semi")
                     )
-                    cross = _verify_jaccard_pairs(
-                        cand_cross, sh_a, sizes_a, threshold,
-                        sh_b=sh_b, sizes_b=sizes_b,
+                    cross = _verify_jaccard_pairs_arrays(
+                        cand_cross, arrs_a, threshold, arrs_b=sk
                     )
                     pairs = pairs.unionByName(cross)
 
@@ -632,8 +649,8 @@ def run_dedup_stream_minhash(
                 sig_root, batch_id, "bkey", run_m, single_task=tiny,
             )
             _write_run(
-                sh_b.select("doc_id", "h"), sh_root, batch_id, "doc_id",
-                run_m, single_task=tiny,
+                sk.select("doc_id", F.explode("hs").alias("h")), sh_root,
+                batch_id, "doc_id", run_m, single_task=tiny,
             )
             new_run = {
                 "rid": int(batch_id), "gen": 0,
@@ -665,7 +682,7 @@ def run_dedup_stream_minhash(
             if auto_compact_runs and len(committed_runs) > auto_compact_runs:
                 compact_lsh_state(spark, state_dir, fs=fs)
         finally:
-            for df in (cand_cross, banded_b, sig_b, sh_b):
+            for df in (cand_cross, sk):
                 if df is not None:
                     df.unpersist()
 

@@ -952,6 +952,7 @@ def test_stream_dedup_probe_never_shuffles_state(spark, sf_dir):
     from mysql_cdc_redis_spark.operators.dedup import (
         _banded,
         minhash_signatures,
+        minhash_sketch,
         shingle_hashes,
     )
     from mysql_cdc_redis_spark.sources import load_table
@@ -978,16 +979,18 @@ def test_stream_dedup_probe_never_shuffles_state(spark, sf_dir):
             [{"rid": 0, "gen": 0, "n_buckets": 16}],
             "doc_id bigint, band int, bkey string, gen int, ingest_id int, bucket int",
         )
-        banded_b = _banded(mh(batch).select("doc_id", *mh_cols), 16, 4)
+        banded_b = _banded(minhash_sketch(batch, 3, 16).select("doc_id", *mh_cols), 16, 4)
         plan = _plan(_cross_candidates(state_sig, banded_b))
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
         # the STATE side subtree (the join's streamed child: the tree
         # lines between the BroadcastHashJoin node and its
         # BroadcastExchange child) must contain NO Exchange — the corpus
-        # runs feed the join straight from the scan.  The exchanges
-        # under the BroadcastExchange are the BATCH side's own
-        # shingle/sign construction: O(batch) by definition.
+        # runs feed the join straight from the scan.  The batch side is
+        # built the way the stream builds it (minhash_sketch, which has
+        # no exchange of its own); the only exchange under the
+        # BroadcastExchange is this test's ``limit`` gathering the
+        # 50-doc batch: O(batch) by definition.
         tree = plan.split("\n\n")[0]
         lines = tree.splitlines()
         j = next(i for i, l in enumerate(lines) if "BroadcastHashJoin" in l)
@@ -1001,6 +1004,23 @@ def test_stream_dedup_probe_never_shuffles_state(spark, sf_dir):
         assert sum("Exchange" in l for l in above) <= 1, above
     finally:
         shutil.rmtree(sig_root, ignore_errors=True)
+
+
+def test_stream_dedup_batch_sketch_never_shuffles(spark, sf_dir):
+    """The streaming dedup's batch side — one sketch row per doc
+    (shingle-hash array, size, MinHash signature) and its band digests —
+    is narrow expressions over the scan: zero Exchange nodes, so a
+    micro-batch pays no shuffle to sign itself."""
+    from mysql_cdc_redis_spark.operators.dedup import _banded, minhash_sketch
+    from mysql_cdc_redis_spark.sources import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    sk = minhash_sketch(docs, 3, 16)
+    banded = _banded(sk.select("doc_id", *[f"mh{i}" for i in range(16)]), 16, 4)
+    for df in (sk, banded):
+        plan = _plan(df)
+        assert "Exchange" not in plan, plan
+        assert "Scan parquet" in plan, plan
 
 
 def test_stream_dedup_state_read_prunes_buckets_and_keys(spark, sf_dir):

@@ -116,6 +116,21 @@ def test_auto_bucket_count_sizing():
         assert n & (n - 1) == 0 and 32 <= n <= 4096
 
 
+def test_shuffle_width_parse_tolerates_non_integer_conf():
+    """The certified-pair fan-out reads spark.sql.shuffle.partitions as
+    an int; a non-integer value (``'auto'`` on some platforms) must read
+    as None, which skips the fan-out, instead of raising."""
+    from types import SimpleNamespace
+
+    from mysql_cdc_redis_spark.operators.dedup import _shuffle_partitions
+
+    def stub(value):
+        return SimpleNamespace(conf=SimpleNamespace(get=lambda key, default: value))
+
+    assert _shuffle_partitions(stub("8")) == 8
+    assert _shuffle_partitions(stub("auto")) is None
+
+
 def test_stage_parquet_reap(spark):
     """Round-5 advice (medium): intra-call staging dirs are reaped by
     the operator, not left for process exit.  stage_parquet carries its

@@ -49,6 +49,26 @@ def test_csv_dump_chunking_and_layout(spark, sf_dir):
     assert back.count() == compacted.count()
 
 
+def test_read_dump_leaves_caller_schema_intact(spark):
+    """read_dump adds the dt partition column to its own copy of the
+    schema: calling it twice with one schema object must work, and the
+    object must keep its fields."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    df = spark.createDataFrame(
+        [(1, "2024-01-02 03:04:05"), (2, "2024-01-03 00:00:00")],
+        "rid long, cdc_ts string",
+    ).withColumn("cdc_ts", F.to_timestamp("cdc_ts"))
+    out = _tmp("dump_schema")
+    dump_to_csv(df, out, date_col="cdc_ts")
+    schema = StructType([StructField("rid", LongType())])
+    first = read_dump(spark, out, schema=schema)
+    second = read_dump(spark, out, schema=schema)
+    assert schema.fieldNames() == ["rid"]
+    assert first.columns == second.columns == ["rid", "dt"]
+    assert sorted(r["rid"] for r in second.collect()) == [1, 2]
+
+
 def test_state_sink_partition_overwrite(spark, sf_dir):
     """K4+K6: table-partitioned parquet state; a per-table clear is a
     partition overwrite that leaves other tables untouched."""

@@ -60,6 +60,46 @@ def _cleanup(*paths):
         shutil.rmtree(p, ignore_errors=True)
 
 
+def test_minhash_sketch_equals_exploded_signature_and_arrays(spark, sf_dir):
+    """The stream's one-row-per-doc sketch must equal the exploded
+    batch form row for row — signature and sizes from
+    ``minhash_signatures`` joined to the hash sets of ``shingle_arrays``
+    — on the fixture corpus plus edge cases: fewer than n tokens,
+    repeated n-grams, case and whitespace variants, empty and NULL text
+    (the last three kinds have no shingles, so no row in either form)."""
+    from mysql_cdc_redis_spark.operators.dedup import (
+        minhash_signatures,
+        minhash_sketch,
+        shingle_arrays,
+        shingle_hashes,
+    )
+
+    mh_cols = [f"mh{i}" for i in range(16)]
+    edge = spark.createDataFrame(
+        [
+            (10_000_001, "two words"),
+            (10_000_002, "a b c a b c a b c a b c"),
+            (10_000_003, "  The Quick\tbrown   FOX jumps  "),
+            (10_000_004, "the quick brown fox jumps"),
+            (10_000_005, ""),
+            (10_000_006, None),
+            (10_000_007, "one two three"),
+        ],
+        "doc_id long, text string",
+    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    for d in (docs.unionByName(edge), edge):
+        sh = shingle_hashes(d, 3)
+        ref = minhash_signatures(sh, 16, with_sizes=True).join(
+            shingle_arrays(sh).select("doc_id", "hs"), "doc_id"
+        )
+        cols = ["doc_id", "n_sh", "hs", *mh_cols]
+        got = minhash_sketch(d, 3, 16).select(*cols).orderBy("doc_id").collect()
+        want = ref.select(*cols).orderBy("doc_id").collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert [r["doc_id"] for r in got] == [10_000_002, 10_000_003, 10_000_004, 10_000_007]
+
+
 @pytest.mark.parametrize("fs_cls", FS_BACKENDS)
 def test_stream_dedup_equals_batch_any_slicing(spark, sf_dir, fs_cls):
     """Telescoping parity: 1-chunk (single batch, within-pairs only) and
@@ -838,8 +878,9 @@ def test_stream_dedup_uncommitted_pairs_partition_is_invisible(spark, sf_dir):
 
 
 def test_stream_dedup_leaves_no_persisted_rdds(spark, sf_dir):
-    """The per-batch persists (shingles + signatures) are scope-released
-    inside foreachBatch — the two-discipline staging lifecycle."""
+    """The per-batch persists (the batch sketch and the cross
+    candidates) are scope-released inside foreachBatch — the
+    two-discipline staging lifecycle."""
     docs = load_table(spark, sf_dir, "documents")
     src = _tmp("dstream_hyg_src")
     stage_changelog_files(docs, src, n_chunks=2, key_col="doc_id")
